@@ -16,7 +16,7 @@ import sys
 import time
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -74,11 +74,11 @@ def noop(df) -> None:
 
 def bench_tag(spark) -> dict:
     from dss_plugin_nlp_analysis_spark.demo import demo_ontology_df
-    from dss_plugin_nlp_analysis_spark.operators.tagger import (
-        TAGGING_SCHEMA,
-        extract_mentions,
-        tag_documents,
-    )
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from dss_plugin_nlp_analysis_spark.operators.tagger import _doc_udf, tag_documents
     from dss_plugin_nlp_analysis_spark.operators.ontology import (
         TagOptions,
         clean_ontology,
@@ -95,12 +95,24 @@ def bench_tag(spark) -> dict:
         spark, "tag/scan+count", lambda: docs.select(F.count("*"), F.count("text")).collect()
     )
 
+    # the kernel's full result (sentences + matches) as one struct, so the
+    # kernel legs ship back everything process_document produces
+    schema = T.StructType(
+        [
+            T.StructField("sentences", T.ArrayType(T.StringType())),
+            T.StructField("matches", T.ArrayType(T.StructType(
+                [T.StructField(f, T.StringType()) for f in ("tag", "category", "keyword")]
+                + [T.StructField("sent_idx", T.IntegerType())]
+            ))),
+        ]
+    )
+    arrow_type = to_arrow_type(schema)
+
     # boundary-only: identical UDF shape, trivial per-row work
-    @F.pandas_udf(TAGGING_SCHEMA)
-    def null_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for text_s, lang_s in it:
-            k = len(text_s)
-            yield pd.DataFrame({"sentences": [[]] * k, "matches": [[]] * k})
+    @arrow_udf(schema)
+    def null_udf(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
+        for text_a, _lang_a in it:
+            yield pa.array([([], [])] * len(text_a), type=arrow_type)
 
     boundary = docs.withColumn("_t", null_udf(F.col("text"), F.col("lang")))
     out["udf_boundary"] = timed(
@@ -109,7 +121,14 @@ def bench_tag(spark) -> dict:
 
     rows = [(r["tag"], r["keyword"], None) for r in clean_ontology(onto, "tag", "keyword", None).collect()]
     compiled = compile_ontology(rows, validate_languages(LANGS, False), TagOptions(), False)
-    extracted = extract_mentions(docs, compiled, "text", "lang", "en", "_tagging", False)
+    kernel = _doc_udf(
+        spark.sparkContext.broadcast(compiled), "en", False, schema,
+        lambda sentences, matches: (
+            sentences,
+            [(m["tag"], m["category"], m["keyword"], m["sent_idx"]) for m in matches],
+        ),
+    )
+    extracted = docs.withColumn("_tagging", kernel(F.col("text"), F.col("lang")))
     out["udf_kernel"] = timed(
         spark, "tag/udf-kernel", lambda: extracted.select(F.count("_tagging")).collect()
     )

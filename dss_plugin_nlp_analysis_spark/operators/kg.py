@@ -5,29 +5,22 @@ columns; this engine materializes `(subj=url, pred=tag, obj=canonical
 ontology node)` triples with full provenance.
 
 Canonicalization is a connected-components pass over the alias graph
-(tag ↔ keyword edges from the ontology). The ontology is broadcast-sized
-(SURVEY.md §1.4), so union-find runs on the driver and the resulting
-tag→canonical map ships as a broadcast join payload — no iterative
-distributed CC is needed (it would be for a billion-node alias graph; the
-map-side design keeps that door open by isolating the mapping behind one
-small dimension table).
+(tag ↔ keyword edges from the ontology, ``ontology.canonical_map``). The
+ontology is broadcast-sized (SURVEY.md §1.4), so union-find runs on the
+driver when the ontology is compiled, and the resulting tag→canonical map
+is applied inside the triples UDF — no join and no iterative distributed
+CC (which a billion-node alias graph would need; the map stays isolated
+behind one dict, so that door stays open).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_type
 
-from ..functions.langsupport import validate_languages
-from ..functions.textnorm import normalize_text
-from .ontology import CompiledOntology, TagOptions, clean_ontology, compile_ontology
-from .tagger import extract_mentions, process_document, sentence_of
+from .ontology import TagOptions, canonical_map  # noqa: F401  (re-exported)
+from .tagger import _compile_for, _doc_udf
 
 __all__ = [
     "canonical_map",
@@ -66,104 +59,60 @@ TRIPLE_COLUMNS = [
 ]
 
 
-class _UnionFind:
-    def __init__(self) -> None:
-        self.parent: dict[str, str] = {}
-
-    def find(self, x: str) -> str:
-        p = self.parent.setdefault(x, x)
-        while p != x:
-            self.parent[x] = p = self.parent.setdefault(p, p)
-            x = p
-            p = self.parent[x]
-        return x
-
-    def union(self, a: str, b: str) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            self.parent[rb] = ra
-
-
-def canonical_map(rows: list[tuple[str, str, str | None]]) -> dict[str, str]:
-    """tag → canonical node id.
-
-    Alias graph: tags sharing a *normalized* keyword surface form are
-    aliases (e.g. 'NYC' via keyword 'New York' and 'New_York_City' via the
-    same keyword). Canonical id = lexicographically smallest tag in the
-    component (deterministic).
-    """
-    uf = _UnionFind()
-    for tag, keyword, _cat in rows:
-        kw_node = "\x00kw:" + normalize_text(keyword, ignore_case=True)
-        uf.union("tag:" + tag, kw_node)
-    components: dict[str, list[str]] = {}
-    for tag, _kw, _cat in rows:
-        root = uf.find("tag:" + tag)
-        components.setdefault(root, []).append(tag)
-    return {
-        tag: min(tags)
-        for tags in components.values()
-        for tag in tags
-    }
-
-
-_TRIPLE_ROWS_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("pred", T.StringType()),
-            T.StructField("obj", T.StringType()),
-            T.StructField("keyword", T.StringType()),
-            T.StructField("sentence", T.StringType()),
-            T.StructField("sent_idx", T.IntegerType()),
-            T.StructField("category", T.StringType()),
-        ]
-    )
+_TRIPLE_ROW = T.StructType(
+    [
+        T.StructField("pred", T.StringType()),
+        T.StructField("obj", T.StringType()),
+        T.StructField("keyword", T.StringType()),
+        T.StructField("sentence", T.StringType()),
+        T.StructField("sent_idx", T.IntegerType()),
+        T.StructField("category", T.StringType()),
+    ]
 )
 
 
-def _triple_rows_udf(payload_ref, default_lang: str, skip_unknown: bool):
-    """Arrow-batched fused extract+project UDF for ``build_triples``: one
-    (pred, obj, keyword, sentence, sent_idx, category) row per match,
-    sentence text resolved in Python and the tag→canonical-node map
-    applied inline (``payload_ref.value`` is ``(compiled, cmap|None)``;
-    ``obj = cmap.get(tag, tag)`` is exactly the former broadcast left
-    join + coalesce, with the join node gone from the plan)."""
+def _triple_rows(compiled_ref, cmap: dict[str, str], text: Column, lang: Column,
+                 language: str, skip_unknown: bool) -> Column:
+    """``array<struct<pred, obj, keyword, sentence, sent_idx, category>>``,
+    one element per match: the triples emitter over the shared document
+    UDF, with ``obj = cmap.get(tag, tag)`` (the tag→canonical-node map
+    applied inline, so no join reaches the plan)."""
+    cget = cmap.get
 
-    arrow_type = to_arrow_type(_TRIPLE_ROWS_SCHEMA)
+    def emit(sentences, matches):
+        return [
+            (m["tag"], cget(m["tag"], m["tag"]), m["keyword"],
+             sentences[m["sent_idx"]], m["sent_idx"], m["category"])
+            for m in matches
+        ]
 
-    @arrow_udf(_TRIPLE_ROWS_SCHEMA)
-    def fmt(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled, cmap = getattr(payload_ref, "value", payload_ref)
-        if cmap is None:
-            cmap = {}
-        cget = cmap.get
-        known = set(compiled.patterns)
-        for text_a, lang_a in it:
-            rows_out: list[list[tuple]] = []
-            for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
-                lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        rows_out.append([])
-                        continue
-                    raise ValueError(f"Unsupported language code: '{lang}'")
-                sentences, matches = process_document(compiled, text, lang)
-                rows_out.append(
-                    [
-                        (
-                            m["tag"],
-                            cget(m["tag"], m["tag"]),
-                            m["keyword"],
-                            sentences[m["sent_idx"]],
-                            m["sent_idx"],
-                            m["category"],
-                        )
-                        for m in matches
-                    ]
-                )
-            yield pa.array(rows_out, type=arrow_type)
+    udf = _doc_udf(compiled_ref, language, skip_unknown, T.ArrayType(_TRIPLE_ROW), emit)
+    return udf(text, lang)
 
-    return fmt
+
+def _triples(
+    docs_df: DataFrame,
+    compiled_ref,
+    cmap: dict[str, str],
+    url_col: str,
+    text_col: str,
+    lang_col: str | None,
+    ts_col: str | None,
+    language: str,
+    skip_unknown: bool,
+) -> DataFrame:
+    """The ``TRIPLE_COLUMNS`` table of ``docs_df`` — one row per mention,
+    no-match docs dropped. Shared by batch ``build_triples`` and
+    ``streaming.stream_triples``, so both emit the same rows for the same
+    pages."""
+    lang_expr = F.col(lang_col) if lang_col else F.lit(language)
+    rows = _triple_rows(compiled_ref, cmap, F.col(text_col), lang_expr, language, skip_unknown)
+    return docs_df.select(
+        F.col(url_col).alias("subj"),
+        lang_expr.alias("lang"),
+        (F.col(ts_col) if ts_col else F.lit(None).cast("timestamp")).alias("warc_ts"),
+        F.explode(rows).alias("m"),
+    ).select("subj", "m.*", "lang", "warc_ts")
 
 
 def build_triples(
@@ -187,64 +136,21 @@ def build_triples(
 
     Physical plan: optional repartition by ``xxhash64(url)`` (north rule —
     defuses hot-domain skew before the embarrassingly-parallel match
-    stage), one Arrow UDF pass, explode, then a broadcast join to the
-    canonical-node dimension. Zero non-broadcast shuffles after the
-    optional repartition.
+    stage), then one Arrow UDF pass that emits the final triple rows with
+    the tag→canonical-node map already applied, and one explode. No join
+    and no shuffle after the optional repartition.
     """
-    spark = docs_df.sparkSession
-    clean = clean_ontology(ontology_df, tag_col, keyword_col, category_col)
-    rows = [
-        (r["tag"], r["keyword"], r["category"] if category_col else None)
-        for r in clean.collect()
-    ]
-    if languages is None:
-        if lang_col:
-            languages = [
-                r[0]
-                for r in docs_df.select(lang_col)
-                .where(F.col(lang_col).isNotNull())
-                .distinct()
-                .collect()
-            ]
-        else:
-            languages = [language]
-    languages = validate_languages(languages, skip_unknown)
-    compiled = compile_ontology(rows, languages, options, category_col is not None)
-
+    compiled = _compile_for(
+        docs_df, ontology_df, tag_col, keyword_col, category_col, lang_col,
+        language, languages, options, skip_unknown,
+    )
     if repartition_by_url:
         docs_df = docs_df.repartition(repartition_by_url, F.xxhash64(F.col(url_col)))
-
-    # fused extract+project UDF: the per-match (pred, obj, keyword,
-    # sentence, sent_idx, category) rows are assembled in the same Python
-    # pass as extraction, so the JVM side is one codegen'd explode — the
-    # previous interpreted transform-over-matches (with element_at
-    # sentence resolution) is gone, the sentences array never ships back,
-    # and the tag→canonical map (driver-computed, ontology-sized) rides
-    # the same broadcast instead of a broadcast-join dimension: the
-    # triples plan has ZERO joins and zero exchanges (beyond an optional
-    # explicit repartition)
-    cmap = canonical_map(rows) if canonicalize else None
-    udf = _triple_rows_udf(
-        spark.sparkContext.broadcast((compiled, cmap)), language, skip_unknown
+    return _triples(
+        docs_df, docs_df.sparkSession.sparkContext.broadcast(compiled),
+        compiled.canonical if canonicalize else {},
+        url_col, text_col, lang_col, ts_col, language, skip_unknown,
     )
-    lang_expr = F.col(lang_col) if lang_col else F.lit(language)
-    out = docs_df.select(
-        F.col(url_col).alias("subj"),
-        (F.col(lang_col) if lang_col else F.lit(language)).alias("lang"),
-        (F.col(ts_col) if ts_col else F.lit(None).cast("timestamp")).alias("warc_ts"),
-        F.explode(udf(F.col(text_col), lang_expr)).alias("m"),
-    ).select(
-        "subj",
-        F.col("m")["pred"].alias("pred"),
-        F.col("m")["obj"].alias("obj"),
-        F.col("m")["keyword"].alias("keyword"),
-        F.col("m")["sentence"].alias("sentence"),
-        F.col("m")["sent_idx"].alias("sent_idx"),
-        F.col("m")["category"].alias("category"),
-        "lang",
-        "warc_ts",
-    )
-    return out.select(*TRIPLE_COLUMNS)
 
 
 def triple_history(

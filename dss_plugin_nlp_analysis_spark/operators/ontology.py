@@ -9,7 +9,8 @@ Reference semantics (SEMANTICS.md §5):
 
 The ontology is broadcast-sized by design (SURVEY.md §1.4): cleaning runs
 as native Catalyst ops; compilation collects the cleaned rows to the driver
-and builds per-language token patterns to ship via ``sc.broadcast``.
+and builds per-language token patterns, plus the tag→canonical-node map of
+the alias graph (``canonical_map``), to ship via ``sc.broadcast``.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from .automaton import TokenAutomaton
 __all__ = [
     "TagOptions",
     "CompiledOntology",
+    "canonical_map",
     "clean_ontology",
     "compile_ontology",
     "align_ontologies",
@@ -87,6 +89,8 @@ class CompiledOntology:
     # entity-linking context profiles: lang -> payload_idx -> frozenset of
     # tokens from the same tag's OTHER keywords (SEMANTICS.md §8)
     profiles: dict[str, dict[int, frozenset[str]]] = field(default_factory=dict)
+    # tag -> canonical ontology node (``canonical_map`` of the rows)
+    canonical: dict[str, str] = field(default_factory=dict)
     _automata: dict[str, TokenAutomaton] = field(default_factory=dict, repr=False)
 
     def __getstate__(self):
@@ -106,6 +110,47 @@ class CompiledOntology:
 
     def languages(self) -> list[str]:
         return list(self.patterns)
+
+
+class _UnionFind:
+    def __init__(self) -> None:
+        self.parent: dict[str, str] = {}
+
+    def find(self, x: str) -> str:
+        p = self.parent.setdefault(x, x)
+        while p != x:
+            self.parent[x] = p = self.parent.setdefault(p, p)
+            x = p
+            p = self.parent[x]
+        return x
+
+    def union(self, a: str, b: str) -> None:
+        ra, rb = self.find(a), self.find(b)
+        if ra != rb:
+            self.parent[rb] = ra
+
+
+def canonical_map(rows: list[tuple[str, str, str | None]]) -> dict[str, str]:
+    """tag → canonical node id.
+
+    Alias graph: tags sharing a *normalized* keyword surface form are
+    aliases (e.g. 'NYC' via keyword 'New York' and 'New_York_City' via the
+    same keyword). Canonical id = lexicographically smallest tag in the
+    component (deterministic).
+    """
+    uf = _UnionFind()
+    for tag, keyword, _cat in rows:
+        kw_node = "\x00kw:" + normalize_text(keyword, ignore_case=True)
+        uf.union("tag:" + tag, kw_node)
+    components: dict[str, list[str]] = {}
+    for tag, _kw, _cat in rows:
+        root = uf.find("tag:" + tag)
+        components.setdefault(root, []).append(tag)
+    return {
+        tag: min(tags)
+        for tags in components.values()
+        for tag in tags
+    }
 
 
 def keyword_match_tokens(
@@ -166,6 +211,7 @@ def compile_ontology(
         options=options,
         has_category=has_category,
         profiles=profiles,
+        canonical=canonical_map(rows),
     )
 
 

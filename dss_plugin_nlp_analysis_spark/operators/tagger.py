@@ -1,18 +1,20 @@
-"""The tagging dataflow: mention extraction + output formatting, Spark-first.
+"""The tagging dataflow: one document kernel, one Arrow crossing per output.
 
 Physical plan (SURVEY.md §3, stage boundaries):
 
-    scan → [Arrow UDF: clean → sentencize → normalize → tokenize → AC probe]
-         → native Catalyst array ops / explode / to_json → sink
+    scan → [Arrow UDF: clean → sentencize → normalize → tokenize → AC probe
+            → emit the output shape's rows] → projection / explode_outer → sink
 
-One vectorized pandas UDF does ALL per-document text work in a single pass
-(the reference tokenizes every sentence twice — SURVEY.md §4.3 pathology not
-ported) and returns ``struct<sentences, matches>``. Every output format is
-then a **per-row native transform of the matches array — zero shuffle**:
+``process_document`` is the only per-document kernel, and ``_doc_udf`` is
+the only Python crossing: one Arrow-batched UDF factory that runs the kernel
+on each row and hands its ``(sentences, matches)`` to a small row emitter.
+Each output shape — one_row_per_match, one_row_per_doc, one_row_per_doc_json
+here, and the KG triples of ``kg.build_triples`` and the streaming path — is
+one emitter, so each ships back only its final rows and batch and stream
+cannot drift apart. Every format is a **per-row transform — zero shuffle**:
 the reference's per-document "aggregations" (A1-A4) group by the document
-itself, so keeping matches as an array column makes groupBy/pivot
-unnecessary (the A3 pivot's category universe is ontology-known and becomes
-direct column synthesis).
+itself, so they are computed inside the same Python pass (the A3 pivot's
+category universe is ontology-known and becomes direct column synthesis).
 
 Reference parity map:
 - extraction      → ontology_tagger.py:94-137, sentence_splitter.py:46-118,
@@ -26,12 +28,10 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
-from dataclasses import dataclass
+from collections.abc import Callable, Iterator
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
@@ -47,38 +47,10 @@ from .automaton import filter_leftmost_longest
 from .ontology import CompiledOntology, TagOptions, clean_ontology, compile_ontology
 
 __all__ = [
-    "MATCH_SCHEMA",
-    "TAGGING_SCHEMA",
     "OUTPUT_FORMATS",
-    "extract_mentions",
     "tag_documents",
     "process_document",
-    "TaggerResult",
-    "format_per_doc",
-    "format_per_doc_json",
-    "format_per_match",
-    "sentence_of",
 ]
-
-MATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("sent_idx", T.IntegerType()),
-        T.StructField("tok_start", T.IntegerType()),
-        T.StructField("tok_end", T.IntegerType()),
-        T.StructField("char_start", T.IntegerType()),
-        T.StructField("char_end", T.IntegerType()),
-        T.StructField("tag", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("keyword", T.StringType()),
-    ]
-)
-
-TAGGING_SCHEMA = T.StructType(
-    [
-        T.StructField("sentences", T.ArrayType(T.StringType())),
-        T.StructField("matches", T.ArrayType(MATCH_SCHEMA)),
-    ]
-)
 
 OUTPUT_FORMATS = ("one_row_per_match", "one_row_per_doc", "one_row_per_doc_json")
 
@@ -96,6 +68,7 @@ COLUMN_DESCRIPTIONS = {
     "tag_sentence": "Sentence containing the matched keyword",
     "tag_category": "Category of tag",
 }
+
 
 
 # "plain words" screen for the kernel fast path: a cleaned document of
@@ -252,276 +225,60 @@ def process_document(
     return sentences, matches
 
 
-def _tagging_udf(compiled_ref, default_lang: str, skip_unknown: bool):
-    """Arrow-batched extraction UDF. ``compiled_ref`` is a Broadcast or a
-    plain CompiledOntology (duck-typed via ``.value``)."""
-
-    out_type = to_arrow_type(TAGGING_SCHEMA)
-    sents_type = out_type.field("sentences").type
-    matches_type = out_type.field("matches").type
-
-    @arrow_udf(TAGGING_SCHEMA)
-    def extract(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled: CompiledOntology = getattr(compiled_ref, "value", compiled_ref)
-        known = set(compiled.patterns)
-        for text_a, lang_a in it:
-            sents_out, matches_out = [], []
-            for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
-                lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        sents_out.append([])
-                        matches_out.append([])
-                        continue
-                    raise ValueError(f"Unsupported language code: '{lang}'")
-                sentences, matches = process_document(compiled, text, lang)
-                sents_out.append(sentences)
-                matches_out.append(matches)
-            yield pa.StructArray.from_arrays(
-                [
-                    pa.array(sents_out, type=sents_type),
-                    pa.array(matches_out, type=matches_type),
-                ],
-                fields=list(out_type),
-            )
-
-    return extract
+Emit = Callable[[list[str], list[dict]], object]
 
 
-def _per_match_rows_udf(compiled_ref, default_lang: str, skip_unknown: bool,
-                        has_category: bool):
-    """Fused extract+format UDF for ``one_row_per_match``: emits the final
-    deduped (category?, tag, keyword, sentence) rows per document so the
-    JVM side is a single codegen'd ``explode_outer`` — no interpreted
-    ``transform``/``array_distinct``/``element_at`` higher-order chain over
-    the matches array (measured ~0.8 s of the 3 s flagship wall at 500k
-    docs on local[32]). Dedup mirrors ``format_per_match`` exactly:
-    ordered keep-first over the whole projected row (SEMANTICS.md §7 DIV).
-    """
-    fields = (["category"] if has_category else []) + ["tag", "keyword", "sentence"]
-    schema = T.ArrayType(
-        T.StructType([T.StructField(f, T.StringType()) for f in fields])
-    )
-    arrow_type = to_arrow_type(schema)
+def _doc_udf(ref, default_lang: str, skip_unknown: bool, schema: T.DataType, emit: Emit):
+    """The one Python crossing of the tagging dataflow: an Arrow-batched
+    UDF over ``(text, lang)`` that returns ``emit(sentences, matches)`` of
+    ``process_document`` for each row, typed as ``schema``.
 
-    @arrow_udf(schema)
-    def fmt(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled: CompiledOntology = getattr(compiled_ref, "value", compiled_ref)
-        known = set(compiled.patterns)
-        for text_a, lang_a in it:
-            rows_out: list[list[tuple]] = []
-            for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
-                lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        rows_out.append([])
-                        continue
-                    raise ValueError(f"Unsupported language code: '{lang}'")
-                sentences, matches = process_document(compiled, text, lang)
-                if not matches:
-                    rows_out.append([])
-                    continue
-                rows: list[tuple] = []
-                seen: set[tuple] = set()
-                if has_category:
-                    for mt in matches:
-                        row = (mt["category"], mt["tag"], mt["keyword"],
-                               sentences[mt["sent_idx"]])
-                        if row not in seen:
-                            seen.add(row)
-                            rows.append(row)
-                else:
-                    for mt in matches:
-                        row = (mt["tag"], mt["keyword"], sentences[mt["sent_idx"]])
-                        if row not in seen:
-                            seen.add(row)
-                            rows.append(row)
-                rows_out.append(rows)
-            yield pa.array(rows_out, type=arrow_type)
-
-    return fmt
-
-
-def _doc_json_direct_udf(compiled_ref, default_lang: str, skip_unknown: bool,
-                         has_category: bool):
-    """Fused extract+format UDF for ``one_row_per_doc_json``: builds the
-    JSON strings in the same Python pass as extraction (one JVM↔Python
-    crossing instead of two, and the sentences/matches struct never ships
-    back). Byte format identical to ``_doc_json_udf``."""
-    build_no_cat, build_cat = _doc_json_builders()
-    if not has_category:
-        schema = T.StructType([T.StructField("tag_json_full", T.StringType())])
-    else:
-        schema = T.StructType(
-            [
-                T.StructField("tag_json_categories", T.StringType()),
-                T.StructField("tag_json_full", T.StringType()),
-            ]
-        )
+    ``ref`` is a Broadcast or a plain CompiledOntology (duck-typed via
+    ``.value``; streams pass the plain payload because broadcast variables
+    do not restart cleanly). A NULL/empty lang falls back to
+    ``default_lang``; a lang the ontology was not compiled for raises, or
+    emits ``emit([], [])`` under ``skip_unknown``."""
 
     arrow_type = to_arrow_type(schema)
 
     @arrow_udf(schema)
-    def fmt(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled: CompiledOntology = getattr(compiled_ref, "value", compiled_ref)
+    def rows_of(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
+        compiled: CompiledOntology = getattr(ref, "value", ref)
         known = set(compiled.patterns)
         for text_a, lang_a in it:
-            cats_out: list[str | None] = []
-            full_out: list[str | None] = []
+            rows = []
             for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
                 lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        matches, sentences = [], []
-                    else:
-                        raise ValueError(f"Unsupported language code: '{lang}'")
+                if lang in known:
+                    rows.append(emit(*process_document(compiled, text, lang)))
+                elif skip_unknown:
+                    rows.append(emit([], []))
                 else:
-                    sentences, matches = process_document(compiled, text, lang)
-                if has_category:
-                    cats, full = build_cat(matches, sentences)
-                    cats_out.append(cats)
-                    full_out.append(full)
-                else:
-                    full_out.append(build_no_cat(matches, sentences))
-            cols = ([cats_out] if has_category else []) + [full_out]
-            yield pa.StructArray.from_arrays(
-                [pa.array(c, type=pa.string()) for c in cols],
-                fields=list(arrow_type),
-            )
+                    raise ValueError(f"Unsupported language code: '{lang}'")
+            yield pa.array(rows, type=arrow_type)
 
-    return fmt
+    return rows_of
 
 
-@dataclass
-class TaggerResult:
-    df: DataFrame
-    column_descriptions: dict[str, str]
+# --- row emitters: (sentences, matches) -> the output shape's rows -------
 
+def _per_match_emit(has_category: bool) -> Emit:
+    """one_row_per_match: the document's (category?, tag, keyword,
+    sentence) rows, ordered keep-first dedup over the whole row — the
+    reference's whole-row drop_duplicates (formatting/base.py:107) within
+    the document, same visible rows with no shuffle (SEMANTICS.md §7 DIV).
+    No-match docs emit no rows, which explode_outer turns into one all-NULL
+    row (formatter_by_match.py:94-98)."""
 
-def extract_mentions(
-    docs_df: DataFrame,
-    compiled: CompiledOntology,
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    language: str = "en",
-    result_col: str = "_tagging",
-    skip_unknown: bool = False,
-    broadcast: bool = True,
-) -> DataFrame:
-    """Add ``result_col: struct<sentences, matches>`` to ``docs_df``."""
-    spark = docs_df.sparkSession
-    ref = spark.sparkContext.broadcast(compiled) if broadcast else compiled
-    udf = _tagging_udf(ref, language, skip_unknown)
-    lang_expr = F.col(lang_col) if lang_col else F.lit(language)
-    return docs_df.withColumn(result_col, udf(F.col(text_col), lang_expr))
+    def emit(sentences, matches):
+        if has_category:
+            rows = ((m["category"], m["tag"], m["keyword"], sentences[m["sent_idx"]])
+                    for m in matches)
+        else:
+            rows = ((m["tag"], m["keyword"], sentences[m["sent_idx"]]) for m in matches)
+        return list(dict.fromkeys(rows))
 
-
-# --- formatters (native Catalyst ops over the matches array) -------------
-
-def _m(res: str) -> Column:
-    return F.col(res)["matches"]
-
-
-def sentence_of(res: str, m: Column) -> Column:
-    """Resolve a match's sentence from the result struct's sentences array
-    (shared by the per-match formatter, kg.build_triples, and the
-    streaming triples path — one definition of the 1-based indexing)."""
-    return F.element_at(F.col(res)["sentences"], m["sent_idx"] + 1)
-
-
-_sentence_of = sentence_of
-
-
-def _json_or_null(arr: Column) -> Column:
-    return F.when(F.size(arr) > 0, F.to_json(arr))
-
-
-def format_per_match(
-    df: DataFrame, res: str, has_category: bool, names: dict[str, str]
-) -> DataFrame:
-    """one_row_per_match: project → dedup within doc → explode_outer.
-
-    The reference's whole-row drop_duplicates (formatting/base.py:107)
-    becomes an array_distinct *within* each document — same visible rows
-    (input rows are unique by key), no shuffle (SEMANTICS.md §7 DIV).
-    No-match docs yield one all-NULL row (formatter_by_match.py:94-98).
-    """
-    fields = []
-    if has_category:
-        fields.append(("tag_category", lambda m: m["category"]))
-    fields += [
-        ("tag", lambda m: m["tag"]),
-        ("tag_keyword", lambda m: m["keyword"]),
-        ("tag_sentence", None),  # resolved against sentences array
-    ]
-    proj = F.transform(
-        _m(res),
-        lambda m: F.struct(
-            *[
-                (f(m) if f is not None else _sentence_of(res, m)).alias(names[name])
-                for name, f in fields
-            ]
-        ),
-    )
-    out = df.withColumn("_match", F.explode_outer(F.array_distinct(proj)))
-    for name, _ in fields:
-        out = out.withColumn(names[name], F.col("_match")[names[name]])
-    return out.drop("_match", res)
-
-
-def format_per_doc(
-    df: DataFrame,
-    res: str,
-    has_category: bool,
-    names: dict[str, str],
-    categories: list[str] | None = None,
-) -> DataFrame:
-    """one_row_per_doc — per-row native aggregates, zero shuffle.
-
-    No category (formatter_by_document.py:54-86): tag_list / tag_keywords =
-    JSON arrays of first-appearance distinct values; tag_sentences = concat
-    of (matched sentence + "\\n") per sentence-with-a-match, doc order.
-    With category (formatter_by_document.py:143-222): one
-    tag_list_<NFD(category)> column per ontology category (NULL when the
-    doc has none), text-deduped sentences joined with " " (empty string
-    when no match — reference wart preserved).
-    """
-    m = _m(res)
-    if not has_category:
-        tags = F.transform(m, lambda x: x["tag"])
-        kws = F.transform(m, lambda x: x["keyword"])
-        sent_idxs = F.array_distinct(F.transform(m, lambda x: x["sent_idx"]))
-        sent_texts = F.transform(
-            sent_idxs, lambda i: F.element_at(F.col(res)["sentences"], i + 1)
-        )
-        out = (
-            df.withColumn(names["tag_list"], _json_or_null(F.array_distinct(tags)))
-            .withColumn(names["tag_keywords"], _json_or_null(F.array_distinct(kws)))
-            .withColumn(
-                names["tag_sentences"],
-                F.when(
-                    F.size(sent_idxs) > 0,
-                    F.concat(F.array_join(sent_texts, "\n"), F.lit("\n")),
-                ),
-            )
-        )
-        return out.drop(res)
-    # category path
-    out = df
-    for cat in categories or []:
-        cat_tags = F.array_distinct(
-            F.transform(
-                F.filter(m, lambda x: x["category"] == F.lit(cat)), lambda x: x["tag"]
-            )
-        )
-        out = out.withColumn(names[f"tag_list_{cat}"], _json_or_null(cat_tags))
-    kws = F.array_distinct(F.transform(m, lambda x: x["keyword"]))
-    sents = F.array_distinct(F.transform(m, lambda x: _sentence_of(res, x)))
-    out = out.withColumn(names["tag_keywords"], _json_or_null(kws)).withColumn(
-        names["tag_sentences"],
-        F.array_join(F.transform(sents, lambda s: F.concat(s, F.lit("\n"))), " "),
-    )
-    return out.drop(res)
+    return emit
 
 
 def _slots_json(full: dict) -> str:
@@ -546,8 +303,8 @@ _esc_json = json.encoder.encode_basestring  # dumps' own ensure_ascii=False esca
 
 
 def _doc_json_builders():
-    """Per-doc JSON assembly shared by the fused and two-pass json UDFs —
-    byte format mirrors the reference (ensure_ascii=False, ", " separators)."""
+    """Per-doc JSON assembly for one_row_per_doc_json — byte format mirrors
+    the reference (ensure_ascii=False, ", " separators)."""
 
     def build_no_cat(matches, sentences) -> str | None:
         full: dict[str, dict] = {}
@@ -596,63 +353,96 @@ def _doc_json_builders():
     return build_no_cat, build_cat
 
 
-def _doc_json_udf(has_category: bool):
-    """one_row_per_doc_json over an already-extracted result struct (kept
-    for the compositional ``extract_mentions`` + formatter path; the
-    ``tag_documents`` entry uses the fused ``_doc_json_direct_udf``)."""
-    build_no_cat, build_cat = _doc_json_builders()
+def _json_list(items) -> str | None:
+    """JSON array of strings, byte-equal to Spark ``to_json(array<string>)``
+    (compact separators, non-ASCII unescaped); NULL when empty."""
+    return "[" + ",".join(map(_esc_json, items)) + "]" if items else None
 
-    if not has_category:
-        schema = T.StructType([T.StructField("tag_json_full", T.StringType())])
-    else:
-        schema = T.StructType(
-            [
-                T.StructField("tag_json_categories", T.StringType()),
-                T.StructField("tag_json_full", T.StringType()),
-            ]
+
+def _per_doc_emit(categories: list[str] | None) -> Emit:
+    """one_row_per_doc, one struct row per document.
+
+    No category (formatter_by_document.py:54-86): tag_list / tag_keywords =
+    JSON arrays of first-appearance distinct values; tag_sentences = concat
+    of (matched sentence + "\\n") per sentence index with a match, doc
+    order; all three NULL when nothing matched.
+    With category (formatter_by_document.py:143-222): one tag list per
+    ontology category, positionally (NULL when the doc has none),
+    text-deduped sentences joined with " " (empty string when no match —
+    reference wart preserved).
+    """
+    if categories is None:
+        def emit(sentences, matches):
+            if not matches:
+                return None, None, None
+            sent_idxs = dict.fromkeys(m["sent_idx"] for m in matches)
+            return (
+                _json_list(dict.fromkeys(m["tag"] for m in matches)),
+                _json_list(dict.fromkeys(m["keyword"] for m in matches)),
+                "".join(sentences[i] + "\n" for i in sent_idxs),
+            )
+
+        return emit
+
+    def emit_cat(sentences, matches):
+        tags: dict[str, dict[str, None]] = {c: {} for c in categories}
+        for m in matches:
+            tags[m["category"]][m["tag"]] = None
+        sents = dict.fromkeys(sentences[m["sent_idx"]] for m in matches)
+        return (
+            *map(_json_list, tags.values()),
+            _json_list(dict.fromkeys(m["keyword"] for m in matches)),
+            " ".join(s + "\n" for s in sents),
         )
 
-    def _pairs(batch):
-        # a StructType argument may arrive as a DataFrame (fields as
-        # columns) or as a Series of dicts depending on the Arrow path
-        if isinstance(batch, pd.DataFrame):
-            yield from zip(batch["matches"], batch["sentences"])
+    return emit_cat
+
+
+def _doc_json_emit(has_category: bool) -> Emit:
+    build_no_cat, build_cat = _doc_json_builders()
+    if has_category:
+        return lambda sentences, matches: build_cat(matches, sentences)
+    return lambda sentences, matches: (build_no_cat(matches, sentences),)
+
+
+# --- end-to-end entries ---------------------------------------------------
+
+def _compile_for(
+    docs_df: DataFrame,
+    ontology_df: DataFrame,
+    tag_col: str,
+    keyword_col: str,
+    category_col: str | None,
+    lang_col: str | None,
+    language: str,
+    languages: list[str] | None,
+    options: TagOptions,
+    skip_unknown: bool,
+    lemma_lookup_dir: str | None = None,
+) -> CompiledOntology:
+    """Ontology preparation shared by ``tag_documents`` and
+    ``kg.build_triples``: clean, collect, resolve the document languages
+    (a distinct-languages pre-scan unless ``languages`` is given, as the
+    reference derives it from the data, recipe.py:14-18), validate them and
+    compile."""
+    clean = clean_ontology(ontology_df, tag_col, keyword_col, category_col)
+    rows = [(r["tag"], r["keyword"], r["category"] if category_col else None)
+            for r in clean.collect()]
+    if languages is None:
+        if lang_col:
+            languages = [
+                r[0]
+                for r in docs_df.select(lang_col).where(F.col(lang_col).isNotNull()).distinct().collect()
+            ]
         else:
-            for res in batch:
-                if res is None:
-                    yield None, None
-                else:
-                    yield res["matches"], res["sentences"]
+            languages = [language]
+    # P8 guard (dku_plugin_config_loading.py:153-159): unsupported codes
+    # raise, unless the caller opts into skip-and-continue
+    languages = validate_languages(languages, skip_unknown)
+    return compile_ontology(
+        rows, languages, options, category_col is not None, lemma_lookup_dir
+    )
 
-    @F.pandas_udf(schema)
-    def to_doc_json(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for matches, sentences in _pairs(batch):
-                matches = list(matches) if matches is not None else []
-                sentences = list(sentences) if sentences is not None else []
-                if has_category:
-                    cats, full = build_cat(matches, sentences)
-                    rows.append({"tag_json_categories": cats, "tag_json_full": full})
-                else:
-                    rows.append({"tag_json_full": build_no_cat(matches, sentences)})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return to_doc_json
-
-
-def format_per_doc_json(
-    df: DataFrame, res: str, has_category: bool, names: dict[str, str]
-) -> DataFrame:
-    udf = _doc_json_udf(has_category)
-    out = df.withColumn("_json", udf(F.col(res)))
-    cols = (["tag_json_categories"] if has_category else []) + ["tag_json_full"]
-    for c in cols:
-        out = out.withColumn(names[c], F.col("_json")[c])
-    return out.drop("_json", res)
-
-
-# --- end-to-end entry -----------------------------------------------------
 
 def tag_documents(
     docs_df: DataFrame,
@@ -676,96 +466,51 @@ def tag_documents(
     """
     if output_format not in OUTPUT_FORMATS:
         raise ValueError(f"unknown output_format '{output_format}'")
-    clean = clean_ontology(ontology_df, tag_col, keyword_col, category_col)
-    rows = [(r["tag"], r["keyword"], r["category"] if category_col else None)
-            for r in clean.collect()]
-    if languages is None:
-        if lang_col:
-            languages = [
-                r[0]
-                for r in docs_df.select(lang_col).where(F.col(lang_col).isNotNull()).distinct().collect()
-            ]
-        else:
-            languages = [language]
-    # P8 guard (dku_plugin_config_loading.py:153-159): unsupported codes
-    # raise, unless the caller opts into skip-and-continue
-    languages = validate_languages(languages, skip_unknown)
-    has_category = category_col is not None
-    compiled = compile_ontology(
-        rows, languages, options, has_category, lemma_lookup_dir
+    compiled = _compile_for(
+        docs_df, ontology_df, tag_col, keyword_col, category_col, lang_col,
+        language, languages, options, skip_unknown, lemma_lookup_dir,
     )
-    res = "_tagging"
+    has_category = category_col is not None
 
-    input_cols = docs_df.columns
-    categories = None
     if output_format == "one_row_per_match":
         base_names = (["tag_category"] if has_category else []) + [
             "tag", "tag_keyword", "tag_sentence",
         ]
+        emit = _per_match_emit(has_category)
     elif output_format == "one_row_per_doc":
+        categories = None
+        base_names = ["tag_list"]
         if has_category:
-            categories = []
-            for _t, c in compiled.payloads:  # first-appearance category order
-                if c not in categories:
-                    categories.append(c)
+            categories = list(dict.fromkeys(c for _t, c in compiled.payloads))
             # NFD-normalized category in the column name (the reference calls
             # unicode_normalize_text with its default form — formatter_by_document.py:198-205)
-            base_names = [
-                f"tag_list_{normalize_text(c)}" for c in categories
-            ] + ["tag_keywords", "tag_sentences"]
-        else:
-            base_names = ["tag_list", "tag_keywords", "tag_sentences"]
+            base_names = [f"tag_list_{normalize_text(c)}" for c in categories]
+        base_names += ["tag_keywords", "tag_sentences"]
+        emit = _per_doc_emit(categories)
     else:
         base_names = (["tag_json_categories"] if has_category else []) + ["tag_json_full"]
-
-    finals = unique_names(base_names, input_cols)
-    names = dict(zip(base_names, finals))
+        emit = _doc_json_emit(has_category)
+    # human descriptions as column metadata (S5; base.py:72-77); per-category
+    # columns are described by their raw category, positionally, since two
+    # raw categories can NFD-normalize to the same base name
+    comments = [COLUMN_DESCRIPTIONS.get(b) for b in base_names]
     if output_format == "one_row_per_doc" and has_category:
-        # per-category columns keyed by raw category for the formatter —
-        # mapped POSITIONALLY (categories[i] -> finals[i]), because two raw
-        # categories can NFD-normalize to the same base name; a dict keyed
-        # by the normalized name would collapse them and orphan a column
-        for c, fin in zip(categories, finals):
-            names[f"tag_list_{c}"] = fin
+        comments[:len(categories)] = [f"List of '{c}' tags" for c in categories]
 
-    # per_match and json run a FUSED extract+format UDF (formatting done in
-    # the same Python pass; JVM side is a codegen'd explode/projection with
-    # no interpreted higher-order functions and no second Python crossing);
-    # per_doc keeps the compositional extract_mentions + native formatter.
-    spark = docs_df.sparkSession
-    lang_expr = F.col(lang_col) if lang_col else F.lit(language)
-    if output_format == "one_row_per_match":
-        ref = spark.sparkContext.broadcast(compiled)
-        udf = _per_match_rows_udf(ref, language, skip_unknown, has_category)
-        out = docs_df.withColumn(
-            "_match", F.explode_outer(udf(F.col(text_col), lang_expr))
-        )
-        fields = (["category"] if has_category else []) + ["tag", "keyword", "sentence"]
-        for b, f in zip(base_names, fields):
-            out = out.withColumn(names[b], F.col("_match")[f])
-        out = out.drop("_match")
-    elif output_format == "one_row_per_doc":
-        tagged = extract_mentions(
-            docs_df, compiled, text_col, lang_col, language, res, skip_unknown
-        )
-        out = format_per_doc(tagged, res, has_category, names, categories)
-    else:
-        ref = spark.sparkContext.broadcast(compiled)
-        udf = _doc_json_direct_udf(ref, language, skip_unknown, has_category)
-        out = docs_df.withColumn("_json", udf(F.col(text_col), lang_expr))
-        for c in base_names:
-            out = out.withColumn(names[c], F.col("_json")[c])
-        out = out.drop("_json")
-    out = out.select(*ordered_with_new_after(out.columns, finals, text_col))
-    # attach human descriptions as column metadata (S5; base.py:72-77)
-    comments = {}
-    for base, final in names.items():
-        if base in COLUMN_DESCRIPTIONS:
-            comments[final] = COLUMN_DESCRIPTIONS[base]
-        elif base.startswith("tag_list_") and categories:
-            raw = base[len("tag_list_"):]
-            comments[final] = f"List of '{raw}' tags"
-    for col, comment in comments.items():
-        if col in out.columns:
-            out = out.withColumn(col, F.col(col).alias(col, metadata={"comment": comment}))
-    return out.select(*ordered_with_new_after(out.columns, finals, text_col))
+    # each emitted row is a struct whose fields are the final column names
+    # (suffixed against the input columns, cleaning_utils.py:60-92)
+    finals = unique_names(base_names, docs_df.columns)
+    row_type = T.StructType([T.StructField(f, T.StringType()) for f in finals])
+    per_match = output_format == "one_row_per_match"
+    udf = _doc_udf(
+        docs_df.sparkSession.sparkContext.broadcast(compiled), language, skip_unknown,
+        T.ArrayType(row_type) if per_match else row_type, emit,
+    )
+    rows = udf(F.col(text_col), F.col(lang_col) if lang_col else F.lit(language))
+    out = docs_df.withColumn("_tags", F.explode_outer(rows) if per_match else rows)
+    new = {
+        f: F.col("_tags")[f].alias(f, metadata={"comment": c})
+        for f, c in zip(finals, comments)
+    }
+    order = ordered_with_new_after(docs_df.columns + finals, finals, text_col)
+    return out.select(*[new.get(c, c) for c in order])

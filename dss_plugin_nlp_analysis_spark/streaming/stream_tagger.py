@@ -1,11 +1,11 @@
 """Structured Streaming variant of the tagging/KG pipeline.
 
 The reference is strictly batch (SURVEY.md §2.9); this is new surface for
-continuous crawl ingestion: a stream of web pages → the same Arrow match
-UDF → triples, with exactly-once sinks via foreachBatch + the per-batch
-manifest. The extraction UDF is stateless per document, so it drops into a
-streaming plan unchanged — watermarks/windows only matter for the optional
-rate aggregation.
+continuous crawl ingestion: a stream of web pages → the batch triples
+UDF and projection of ``kg.build_triples`` → triples, with exactly-once
+sinks via foreachBatch + the per-batch manifest. The document UDF is
+stateless per document, so it drops into a streaming plan unchanged —
+watermarks/windows only matter for the optional rate aggregation.
 """
 
 from __future__ import annotations
@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.kg import _triple_rows, _triples
 from ..operators.ontology import CompiledOntology
-from ..operators.tagger import extract_mentions, sentence_of
 
 __all__ = [
     "stream_pages", "stream_triples", "stream_mention_rate",
@@ -38,32 +38,16 @@ def stream_triples(
     text_col: str = "text",
     lang_col: str | None = "lang",
 ) -> DataFrame:
-    """Streaming mention extraction → per-match triple rows."""
-    tagged = extract_mentions(
-        pages, compiled, text_col, lang_col, result_col="_t",
-        skip_unknown=True, broadcast=False,  # broadcast vars don't restart cleanly in streams
-    )
-    # sentence resolved inside the per-row transform, before exploding
-    # (same shape as kg.build_triples: never duplicate the sentences array
-    # once per match row)
-    m_structs = F.transform(
-        F.col("_t")["matches"],
-        lambda m: F.struct(
-            m["tag"].alias("pred"),
-            m["tag"].alias("obj"),
-            m["keyword"].alias("keyword"),
-            sentence_of("_t", m).alias("sentence"),
-        ),
-    )
-    return tagged.select(
-        F.col(url_col).alias("subj"), F.explode(m_structs).alias("m")
-    ).select(
-        "subj",
-        F.col("m")["pred"].alias("pred"),
-        F.col("m")["obj"].alias("obj"),
-        F.col("m")["keyword"].alias("keyword"),
-        F.col("m")["sentence"].alias("sentence"),
-    )
+    """Streaming mention extraction → the batch triples table: the same
+    ``kg.TRIPLE_COLUMNS`` rows ``kg.build_triples`` emits for the same
+    pages, ``obj`` mapped through ``compiled.canonical``. ``warc_ts`` is
+    the pages' ``warc_ts`` column, or a NULL timestamp when the stream has
+    none."""
+    ts_col = "warc_ts" if "warc_ts" in pages.columns else None
+    # the plain payload, not a Broadcast: broadcast vars don't restart
+    # cleanly in streams
+    return _triples(pages, compiled, compiled.canonical, url_col, text_col,
+                    lang_col, ts_col, "en", True)
 
 
 def stream_mention_rate(
@@ -83,16 +67,15 @@ def stream_mention_rate(
     window finalized — the standard Structured Streaming pattern for
     continuous ingestion monitoring (emit to an append sink once windows
     close, or a memory/update sink for live dashboards)."""
-    tagged = extract_mentions(
-        pages, compiled, text_col, lang_col, result_col="_t",
-        skip_unknown=True, broadcast=False,
+    tagged = pages.withColumn(
+        "_t", _triple_rows(compiled, {}, F.col(text_col), F.col(lang_col), "en", True)
     )
     return (
         tagged.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window), F.col(lang_col).alias("lang"))
         .agg(
             F.count("*").alias("n_pages"),
-            F.sum(F.size(F.col("_t")["matches"])).alias("n_mentions"),
+            F.sum(F.size(F.col("_t"))).alias("n_mentions"),
         )
     )
 

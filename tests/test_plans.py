@@ -30,11 +30,17 @@ def test_per_match_format_zero_shuffle(spark, docs):
 
 
 def test_per_doc_format_zero_shuffle(spark, docs):
-    out = tag_documents(
-        docs, demo_ontology_df(spark), lang_col="lang", languages=LANGS,
-        output_format="one_row_per_doc",
-    )
-    assert "Exchange" not in plan_of(out)
+    # formatted in the extraction UDF: no shuffle and no interpreted
+    # higher-order functions, with and without the category pivot
+    for cat in (False, True):
+        out = tag_documents(
+            docs, demo_ontology_df(spark, with_category=cat), lang_col="lang",
+            languages=LANGS, category_col="category" if cat else None,
+            output_format="one_row_per_doc",
+        )
+        plan = plan_of(out)
+        assert "Exchange" not in plan, plan
+        assert "lambdafunction" not in plan, plan
 
 
 def test_per_doc_json_zero_shuffle(spark, docs):

@@ -119,3 +119,34 @@ def test_stream_mention_rate_append_finalizes_and_drops_late(spark, tmp_path):
     assert hour0[0]["n_pages"] == 3 and hour0[0]["n_mentions"] == 3
     # the 03:00 window never finalizes (no later event) -> not emitted
     assert not [r for r in got if r["window"]["start"].hour == 3]
+
+
+def test_stream_triples_equal_batch_triples(spark, tmp_path):
+    """Batch ``build_triples`` and ``stream_triples`` over the same pages
+    give the same multiset of rows over every triple column — including
+    the canonical ``obj`` (the demo ontology's shared 'engine' alias maps
+    spark_engine to analytics_engine) and the page's ``warc_ts``."""
+    from collections import Counter
+
+    from dss_plugin_nlp_analysis_spark.operators.kg import TRIPLE_COLUMNS, build_triples
+    from dss_plugin_nlp_analysis_spark.sources.webpages import demo_kg_ontology
+
+    langs = ["en", "fr", "es", "de"]
+    src, out, ckpt = (str(tmp_path / d) for d in ("src_par", "out_par", "ckpt_par"))
+    pages_df(spark, 80, seed=11).coalesce(3).write.parquet(src)
+    onto = demo_kg_ontology(spark)
+    compiled = compile_ontology([tuple(r) for r in onto.collect()], langs, TagOptions(), True)
+
+    q = run_stream_to_parquet(
+        stream_triples(stream_pages(spark, src, WEB_PAGE_SCHEMA), compiled), out, ckpt
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    streamed = spark.read.parquet(out).select(*TRIPLE_COLUMNS).collect()
+    batch = build_triples(spark.read.parquet(src), onto, languages=langs).collect()
+
+    assert any(r["pred"] != r["obj"] for r in batch)
+    assert len(batch) > 0
+    assert Counter(map(tuple, streamed)) == Counter(map(tuple, batch))

@@ -188,6 +188,49 @@ def test_one_row_per_doc_category_format(spark):
     assert rows[1]["tag_sentences"] == ""
 
 
+def test_one_row_per_doc_repeated_sentence(spark):
+    # an identical matching sentence twice: without category tag_sentences
+    # dedups by sentence index (both kept), with category by sentence text
+    # (one kept) — SEMANTICS §7
+    r = run(spark, ["alpha. alpha."], [("A", "alpha")], fmt="one_row_per_doc")[0]
+    assert (r["tag_list"], r["tag_keywords"], r["tag_sentences"]) == (
+        '["A"]', '["alpha"]', "alpha.\nalpha.\n"
+    )
+    r = run(
+        spark, ["alpha. alpha."], [("A", "alpha", "c1"), ("B", "beta", "c2")],
+        with_category=True, fmt="one_row_per_doc",
+    )[0]
+    assert (r["tag_list_c1"], r["tag_list_c2"], r["tag_keywords"], r["tag_sentences"]) == (
+        '["A"]', None, '["alpha"]', "alpha.\n"
+    )
+
+
+def test_per_doc_json_lists_equal_spark_to_json(spark):
+    """The per-doc tag_list / tag_keywords bytes equal Spark's own
+    ``to_json(array_distinct(...))`` over the same values, on adversarial
+    strings (quote, backslash, control chars, DEL, U+2028, emoji)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from dss_plugin_nlp_analysis_spark.operators.tagger import _per_doc_emit
+
+    nasty = ['q"t', "b\\s", "c\x01", "d\x7f", "ls\u2028", "🎉", "é中", "t\tn\n", "/", "x"]
+    rng = random.Random(7)
+    docs = []
+    for _ in range(60):
+        k = rng.randint(1, 6)
+        docs.append(([rng.choice(nasty) for _ in range(k)], [rng.choice(nasty) for _ in range(k)]))
+    ref = spark.createDataFrame(docs, "tags array<string>, kws array<string>").select(
+        F.to_json(F.array_distinct("tags")), F.to_json(F.array_distinct("kws"))
+    ).collect()
+    emit = _per_doc_emit(None)
+    for (tags, kws), want in zip(docs, ref):
+        matches = [{"tag": t, "keyword": k, "sent_idx": 0} for t, k in zip(tags, kws)]
+        got = emit(["s"], matches)
+        assert got[:2] == tuple(want), (tags, kws)
+
+
 def test_one_row_per_doc_json_format(spark):
     rows = run(
         spark,
