@@ -5993,7 +5993,10 @@ def oracle_sql() -> dict[str, str]:
                  ) AS rank
           FROM pairs
         ),
-        runs AS (SELECT query_id, doc_id, rank FROM ranked WHERE rank <= 10),
+        runs AS (
+          SELECT query_id, doc_id, min(rank) AS rank
+          FROM ranked WHERE rank <= 10 GROUP BY query_id, doc_id
+        ),
         qr AS (
           SELECT * FROM (
             SELECT query_id, doc_id,

@@ -151,7 +151,7 @@ def bench_tag(spark) -> dict:
 
 def bench_minhash(spark) -> dict:
     from dss_plugin_nlp_analysis_spark.operators.dedup import (
-        _banded_small_keys,
+        _band_buckets,
         exploded_shingles,
         minhash_candidate_pairs,
     )
@@ -169,14 +169,17 @@ def bench_minhash(spark) -> dict:
         spark, "minhash/md5", lambda: exh.select(F.count("h")).collect()
     )
     sig = exh.groupBy("id").agg(
-        *[F.min(F.substring("h", 1 + 4 * i, 4)).alias(f"s{i}") for i in range(8)]
+        *[
+            F.min(F.conv(F.substring("h", 1 + 4 * i, 4), 16, 10).cast("int")).alias(f"s{i}")
+            for i in range(8)
+        ]
     )
     out["signatures"] = timed(
         spark, "minhash/signatures", lambda: sig.select(F.count("*")).collect()
     )
-    small = _banded_small_keys(docs, "doc_id", "text", 8, 4, 3, 1000)
+    buckets = _band_buckets(docs, "doc_id", "text", 8, 4, 3)
     out["banded_keys"] = timed(
-        spark, "minhash/banded", lambda: small.select(F.count("*")).collect()
+        spark, "minhash/banded", lambda: buckets.select(F.count("*")).collect()
     )
 
     def full():

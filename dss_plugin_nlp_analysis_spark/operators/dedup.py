@@ -10,9 +10,11 @@ Scale notes (100 TB):
 - minhash signatures are computed map-side per document; only
   (doc_id, band_key) pairs — a few dozen bytes/doc — reach the shuffle.
 - LSH banding is one ``groupBy(band_key)`` collecting each bucket's sorted
-  id array, then pairs within each bucket (no self-join); hot buckets
+  id array (``_band_buckets``, shared by the full and the incremental
+  operator), then pairs within each bucket (no self-join); hot buckets
   (boilerplate) are capped via ``max_bucket_size`` to bound quadratic
-  blowup, the standard web-dedup guard.
+  blowup, the standard web-dedup guard. The incremental operator keys
+  each member by (id, is_delta) and pairs only a bucket's delta members.
 """
 
 from __future__ import annotations
@@ -122,18 +124,19 @@ def exploded_shingles(
     return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
 
 
-def _banded_small_keys(
+def _band_buckets(
     df: DataFrame,
     id_col: str,
     text_col: str,
     num_hashes: int,
     bands: int,
     n: int,
-    max_bucket_size: int,
 ) -> DataFrame:
-    """(id, band_key) rows of the MinHash LSH banding with degenerate
-    buckets (> max_bucket_size members) dropped — the shared build side
-    of ``minhash_candidate_pairs`` and ``incremental_minhash_pairs``."""
+    """(band_key, _ids) — every MinHash LSH bucket with its members' ids
+    as one sorted array (NULL ids dropped by ``collect_list``). The one
+    signature-and-banding core under ``minhash_candidate_pairs`` and
+    ``incremental_minhash_pairs``; ``id_col`` may be any orderable column
+    (the incremental operator passes a struct)."""
     rows_per_band = num_hashes // bands
     ex = exploded_shingles(df, id_col, text_col, n).withColumn("h", F.md5("g"))
     # numeric minima: min over a STRING buffer forces SortAggregate (two
@@ -166,9 +169,8 @@ def _banded_small_keys(
             )
         ).alias("band_key"),
     )
-    counts = banded.groupBy("band_key").agg(F.count("*").alias("_n"))
-    return banded.join(
-        counts.where(F.col("_n") <= max_bucket_size).select("band_key"), "band_key"
+    return banded.groupBy("band_key").agg(
+        F.sort_array(F.collect_list("id")).alias("_ids")
     )
 
 
@@ -202,41 +204,7 @@ def minhash_candidate_pairs(
     OUTPUT of such a bucket (the actual quadratic hazard) is still
     filtered out before any explosion.
     """
-    rows_per_band = num_hashes // bands
-    ex = exploded_shingles(df, id_col, text_col, n).withColumn("h", F.md5("g"))
-    # numeric minima: min over a STRING buffer forces SortAggregate (two
-    # full sorts of the exploded shingle rows); fixed-width lowercase hex
-    # sorts identically to its numeric value ('0'-'9' < 'a'-'f' in ASCII),
-    # so min(conv(window,16,10)) selects exactly the same per-seed minima
-    # while the int buffer keeps the aggregation a hash aggregate
-    sig = ex.groupBy("id").agg(
-        *[
-            F.min(F.conv(F.substring("h", 1 + 4 * i, 4), 16, 10).cast("int")).alias(f"s{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    # the raw "b|s..|s.." concat IS the band key: grouping/
-                    # joining on it yields exactly the md5-key buckets (the
-                    # concat is injective over the fixed-width hex windows)
-                    # while skipping the hash and shuffling 11 bytes, not 32
-                    F.concat_ws(
-                        "|",
-                        F.lit(b),
-                        *[F.col(f"s{b * rows_per_band + r}") for r in range(rows_per_band)],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_key"),
-    )
-    buckets = banded.groupBy("band_key").agg(
-        F.sort_array(F.collect_list("id")).alias("_ids")
-    )
+    buckets = _band_buckets(df, id_col, text_col, num_hashes, bands, n)
     capped = buckets.where(
         (F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket_size)
     )
@@ -389,6 +357,11 @@ def cluster_dedup(
     band) collapse into one cluster, which pairwise filtering alone would
     keep as separate survivors.
 
+    Buckets with more than ``max_bucket_size`` members are dropped before
+    clustering (the candidate pairs are ``minhash_candidate_pairs``'s), so
+    a template shared by more pages than that stays unclustered: its pages
+    come out as singletons unless another, smaller bucket links them.
+
     ``checkpoint_dir`` makes the per-round lineage cuts durable (see
     ``connected_components``) — set it for long runs on a real cluster."""
     from .components import connected_components
@@ -407,6 +380,45 @@ def cluster_dedup(
             F.coalesce("component", F.col("id")).alias("cluster_id"),
         )
         .withColumn("is_duplicate", F.col("id") != F.col("cluster_id"))
+    )
+
+
+def _shingle_overlap(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_doc_freq: int
+) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b) for every candidate pair id_a < id_b
+    of a document-frequency-capped inverted shingle index: the candidate
+    and intersection core shared by ``ngram_jaccard_pairs`` and
+    ``ngram_containment_pairs``. ``inter`` is the exact intersection and
+    ``sz_*`` the exact sizes of the FULL distinct shingle sets; the
+    ``max_doc_freq`` cap only gates which pairs become candidates."""
+    inv = exploded_shingles(df, id_col, text_col, n).distinct()
+    sizes = inv.groupBy("id").agg(F.count("*").alias("sz"))
+    rare = inv.groupBy("g").agg(F.count("*").alias("_df")).where(
+        F.col("_df") <= max_doc_freq
+    ).select("g")
+    idx = inv.join(rare, "g")
+    cand = (
+        idx.alias("x")
+        .join(idx.alias("y"), (F.col("x.g") == F.col("y.g")) & (F.col("x.id") < F.col("y.id")))
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        .distinct()
+    )
+    # intersection over the FULL (uncapped) shingle sets of the (few)
+    # candidates, counted through the inverted index itself
+    inter = (
+        cand.join(inv.alias("a"), F.col("id_a") == F.col("a.id"))
+        .join(
+            inv.alias("b"),
+            (F.col("id_b") == F.col("b.id")) & (F.col("a.g") == F.col("b.g")),
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    return (
+        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
+        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
+        .select("id_a", "id_b", "inter", "sz_a", "sz_b")
     )
 
 
@@ -435,35 +447,11 @@ def ngram_jaccard_pairs(
 
     Returns (id_a, id_b, jaccard) with jaccard ≥ threshold.
     """
-    inv = exploded_shingles(df, id_col, text_col, n).distinct()
-    sizes = inv.groupBy("id").agg(F.count("*").alias("sz"))
-    rare = inv.groupBy("g").agg(F.count("*").alias("_df")).where(
-        F.col("_df") <= max_doc_freq
-    ).select("g")
-    idx = inv.join(rare, "g")
-    cand = (
-        idx.alias("x")
-        .join(idx.alias("y"), (F.col("x.g") == F.col("y.g")) & (F.col("x.id") < F.col("y.id")))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    # exact Jaccard over the FULL (uncapped) shingle sets of the (few)
-    # candidates: intersection counted through the inverted index itself
-    inter = (
-        cand.join(inv.alias("a"), F.col("id_a") == F.col("a.id"))
-        .join(
-            inv.alias("b"),
-            (F.col("id_b") == F.col("b.id")) & (F.col("a.g") == F.col("b.g")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_i"))
-    )
     return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("_sa")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("_sb")), "id_b")
+        _shingle_overlap(df, id_col, text_col, n, max_doc_freq)
         .withColumn(
             "jaccard",
-            F.col("_i") / (F.col("_sa") + F.col("_sb") - F.col("_i")),
+            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
@@ -494,42 +482,8 @@ def ngram_containment_pairs(
     index, never all-pairs); the containment VALUE is exact over the
     full shingle sets of every surviving pair.
     """
-    inv = exploded_shingles(df, id_col, text_col, n).distinct()
-    sizes = inv.groupBy("id").agg(F.count("*").alias("sz"))
-    rare = (
-        inv.groupBy("g")
-        .agg(F.count("*").alias("_df"))
-        .where(F.col("_df") <= max_doc_freq)
-        .select("g")
-    )
-    idx = inv.join(rare, "g")
-    cand = (
-        idx.alias("x")
-        .join(
-            idx.alias("y"),
-            (F.col("x.g") == F.col("y.g")) & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    inter = (
-        cand.join(inv.alias("a"), F.col("id_a") == F.col("a.id"))
-        .join(
-            inv.alias("b"),
-            (F.col("id_b") == F.col("b.id")) & (F.col("a.g") == F.col("b.g")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.join(
-            sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
+        _shingle_overlap(df, id_col, text_col, n, max_doc_freq)
         .withColumn(
             "containment_ppm",
             F.expr("(1000000 * inter) div least(sz_a, sz_b)"),
@@ -884,35 +838,36 @@ def incremental_minhash_pairs(
     either interchangeably (union the new pairs with the previous pair
     archive before ``cluster_dedup``).
 
-    Scale shape: band keys are computed over the union (a production
-    deployment persists the base side's (id, band_key) table between
-    crawls and only the delta side's signatures are new work — the seam
-    is this function's ``small``/``d_keys`` split), and the pair join is
-    DELTA-SIDED: |delta band rows| x bucket width, not the corpus-wide
-    self-join — the whole point of incremental processing at 10^12
-    documents where each crawl touches a small fraction.
+    Scale shape: the full run's banding core (``_band_buckets``) runs
+    once over the union, each member keyed by ``(id, is_delta)``; NULL
+    ids are dropped and buckets are capped exactly as in the full run.
+    The pair step is DELTA-SIDED: each bucket's delta members (a
+    per-bucket filter of the sorted member array) pair with every other
+    member, so the work is |delta members| x bucket width, not the
+    bucket's full i<j set — the whole point of incremental processing
+    at 10^12 documents where each crawl touches a small fraction.
     """
-    delta_ids = delta_df.select(F.col(id_col).alias("id")).distinct()
-    base_kept = base_df.join(
-        delta_ids.withColumnRenamed("id", id_col), [id_col], "left_anti"
-    )
-    union = base_kept.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("t")
-    ).unionByName(
-        delta_df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    )
-    small = _banded_small_keys(
-        union, "id", "t", num_hashes, bands, n, max_bucket_size
-    )
-    d_keys = small.join(delta_ids, "id").select(
-        F.col("id").alias("_did"), "band_key"
-    )
+    base_kept = base_df.join(delta_df.select(id_col), [id_col], "left_anti")
+
+    def keyed(side: DataFrame, is_delta: bool) -> DataFrame:
+        return side.select(
+            F.struct(F.col(id_col).alias("id"), F.lit(is_delta).alias("d")).alias("k"),
+            F.col(text_col).alias("t"),
+        )
+
+    # ids are unique in the union after the anti-join (a repeated delta
+    # row merges into one signature row, as in the full run)
+    union = keyed(base_kept, False).unionByName(keyed(delta_df, True))
+    buckets = _band_buckets(
+        union.where(F.col("k.id").isNotNull()), "k", "t", num_hashes, bands, n
+    ).where((F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket_size))
     return (
-        small.join(d_keys, "band_key")
-        .where(F.col("id") != F.col("_did"))
+        buckets.select(F.explode(F.filter("_ids", lambda k: k["d"])).alias("x"), "_ids")
+        .select("x", F.explode("_ids").alias("y"))
+        .where(F.col("x.id") != F.col("y.id"))
         .select(
-            F.least(F.col("id"), F.col("_did")).alias("id_a"),
-            F.greatest(F.col("id"), F.col("_did")).alias("id_b"),
+            F.least("x.id", "y.id").alias("id_a"),
+            F.greatest("x.id", "y.id").alias("id_b"),
         )
         .distinct()
     )

@@ -62,7 +62,8 @@ def retrieval_metrics(
     ``qrels``: (query, doc, rel) with integer graded relevance; rel <= 0
     rows are dropped (standard TREC convention: non-positive = not
     relevant). NULL keys on either side are dropped (NULL-key contract
-    shared with kg.py/rollup.py).
+    shared with kg.py/rollup.py). A doc listed more than once for a
+    query counts once, at its smallest rank.
 
     Returns one row per query appearing in qrels:
       n_rel        judged-relevant docs for the query
@@ -88,11 +89,19 @@ def retrieval_metrics(
             F.col("q").isNotNull() & F.col("d").isNotNull() & (F.col("rel") > 0)
         )
     )
-    r = runs.select(
-        F.col(query_col).alias("q"),
-        F.col(doc_col).alias("d"),
-        F.col(rank_col).cast("long").alias("rank"),
-    ).where(F.col("q").isNotNull() & F.col("d").isNotNull() & F.col("rank").isNotNull())
+    # one run row per (query, doc) at its best rank: a doc listed twice
+    # must not count twice in n_rel, hits, DCG or the ideal-DCG multiset
+    # (the aggregate shares the join's (q, d) partitioning — no new shuffle)
+    r = (
+        runs.select(
+            F.col(query_col).alias("q"),
+            F.col(doc_col).alias("d"),
+            F.col(rank_col).cast("long").alias("rank"),
+        )
+        .where(F.col("q").isNotNull() & F.col("d").isNotNull() & F.col("rank").isNotNull())
+        .groupBy("q", "d")
+        .agg(F.min("rank").alias("rank"))
+    )
 
     # rank -> discount lookup as a literal CASE chain (k is small)
     def _disc(rank: Column) -> Column:

@@ -73,3 +73,22 @@ def test_mrr_counts_any_relevant_rank_not_just_top_k(spark):
     row = retrieval_metrics(runs, qrels, k=3).collect()[0]
     assert row["hits_at_k"] == 0
     assert row["mrr_ppm"] == 1_000_000 // 5
+
+
+def test_duplicate_run_rows_count_once_at_best_rank(spark):
+    # d1 listed twice (ranks 1 and 3): it is one relevant doc, at rank 1
+    qrels = spark.createDataFrame(
+        [("q", "d1", 2), ("q", "d2", 1)], "query_id string, doc_id string, rel int"
+    )
+    clean = spark.createDataFrame(
+        [("q", "d1", 1), ("q", "d2", 2)], "query_id string, doc_id string, rank int"
+    )
+    dup = spark.createDataFrame(
+        [("q", "d1", 1), ("q", "d2", 2), ("q", "d1", 3)],
+        "query_id string, doc_id string, rank int",
+    )
+    want = retrieval_metrics(clean, qrels, k=3).collect()[0].asDict()
+    got = retrieval_metrics(dup, qrels, k=3).collect()[0].asDict()
+    assert got == want
+    assert (got["n_rel"], got["hits_at_k"], got["mrr_ppm"]) == (2, 2, 1_000_000)
+    assert got["dcg_micro"] == got["idcg_micro"] == 2 * 1_000_000 + 630_930

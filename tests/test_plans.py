@@ -859,6 +859,8 @@ def test_incremental_minhash_no_cartesian(spark):
     assert "CartesianProduct" not in plan, plan
     assert "Window" not in plan
     assert "BatchEvalPython" not in plan
+    # one signature pipeline: the shingle regex appears exactly once
+    assert plan.count("regexp_extract_all") == 1, plan
 
 
 def test_phrase_search_equi_joins_only(spark, docs):

@@ -728,37 +728,63 @@ def test_extract_feed_items_formats_and_positions(spark):
     )
 
 
-def test_incremental_minhash_equals_full_run_delta_slice(spark):
+@pytest.mark.parametrize(
+    "id_type, max_bucket_size",
+    [("long", 1000), ("long", 3), ("string", 1000), ("string", 3)],
+)
+def test_incremental_minhash_equals_full_run_delta_slice(
+    spark, id_type, max_bucket_size
+):
     from dss_plugin_nlp_analysis_spark.operators.dedup import (
         incremental_minhash_pairs,
         minhash_candidate_pairs,
     )
 
+    def key(i):
+        return i if id_type == "long" else f"id{i:03d}"
+
+    schema = f"id {id_type}, t string"
     base = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta doc{i % 3}") for i in range(6)],
-        "id long, t string",
+        [(key(i), f"alpha beta gamma delta epsilon zeta doc{i % 3}") for i in range(6)],
+        schema,
     )
-    delta = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta doc0"),
-         (1, "totally different words entirely here now")],  # re-crawl of id 1
-        "id long, t string",
-    )
+    delta_rows = [
+        (key(100), "alpha beta gamma delta epsilon zeta doc0"),
+        (key(1), "totally different words entirely here now"),  # re-crawl of id 1
+        # a NULL id never pairs; a repeated row merges into one member
+        (None, "alpha beta gamma delta epsilon zeta doc2"),
+        (key(100), "alpha beta gamma delta epsilon zeta doc0"),
+    ]
+    delta = spark.createDataFrame(delta_rows, schema)
+    delta_ids = {key(100), key(1)}
     # reference: full run over (base minus updated ids) union delta,
     # keep only pairs touching a delta id
-    merged = base.where("id != 1").unionByName(delta)
-    full = {
-        (r.id_a, r.id_b)
-        for r in minhash_candidate_pairs(merged, "id", "t").collect()
-    }
-    want = {p for p in full if p[0] in (1, 100) or p[1] in (1, 100)}
+    merged = base.where(F.col("id") != key(1)).unionByName(delta)
+
+    def full_pairs(cap):
+        return {
+            (r.id_a, r.id_b)
+            for r in minhash_candidate_pairs(
+                merged, "id", "t", max_bucket_size=cap
+            ).collect()
+        }
+
+    full = full_pairs(max_bucket_size)
+    want = {p for p in full if p[0] in delta_ids or p[1] in delta_ids}
     got = {
         (r.id_a, r.id_b)
-        for r in incremental_minhash_pairs(base, delta, "id", "t").collect()
+        for r in incremental_minhash_pairs(
+            base, delta, "id", "t", max_bucket_size=max_bucket_size
+        ).collect()
     }
     assert got == want
+    assert key(100) in {i for p in got for i in p}
     # the re-crawled id 1 must be paired by its NEW content (none — it
     # changed away from the cluster), not its old text
-    assert not any(1 in p for p in got)
+    assert not any(key(1) in p for p in got)
+    if max_bucket_size == 3:
+        # the shared-prefix band buckets exceed the cap: the cap must bite
+        assert full < full_pairs(1000)
 
 
 # --------------------------------- weighted_pagerank / decayed_fact_scores
